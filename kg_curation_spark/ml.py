@@ -203,6 +203,9 @@ def train_plausibility_weights(
         from .stages.score import MODEL_W
 
         return MODEL_W.copy()  # degenerate corpus: keep the shipped prior
+    # Spark returns the rows in no fixed order, and IRLS sums over them:
+    # a canonical row order makes the weights equal to the last bit
+    train = train.sort_values([*MODEL_FEATURES, "label"], kind="mergesort")
     x = train[MODEL_FEATURES].to_numpy(dtype="float64")
     y = train["label"].to_numpy(dtype="float64")
     return fit_logistic(x, y, l2=l2)

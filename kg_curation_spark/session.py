@@ -15,6 +15,14 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_mem() -> str:
+    """A quarter of physical RAM, capped at 6 GiB (the sizing perfbench
+    runs under). A fixed large default heap let the driver JVM grow past
+    what a small box holds until the kernel killed it."""
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(6144, ram_mb // 4)}m"
+
+
 def get_spark(
     app_name: str = "kg_curation_spark",
     parallelism: int | None = None,
@@ -90,7 +98,8 @@ def get_spark(
             "spark.sql.adaptive.advisoryPartitionSizeInBytes",
             str(16 * 1024 * 1024),
         )
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEM") or _default_driver_mem())
         # Throughput GC: G1's concurrent cycles collapse under 32 mutator
         # threads churning wide string rows (measured 3-5x slowdowns on
         # materialization-heavy stages in local mode); ParallelGC restores

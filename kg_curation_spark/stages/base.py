@@ -1,9 +1,35 @@
-"""Stage runner: checkpointed parquet sinks, per-partition lineage, resume.
+"""Stage runner: a declared stage graph, fingerprinted commits, resume.
 
-Replaces the reference's incremental JSON memo-caches (cache.py:46-51 —
-save after every key so an interrupted run resumes) with the Spark-native
-equivalent: each stage writes its output parquet once, commits a marker
-file, and a re-run skips straight to reading the committed output.
+The reference resumes an interrupted run from per-key memo caches, each
+entry keyed by what it was computed from (cache.py:46-51). The Spark-native
+equivalent here: a pipeline is declared once as a list of ``Stage``s (name,
+upstream stages, parameters, input frames, function, sink layout) and
+``run_graph`` executes it. Each committed stage writes its output once
+through the sink and then atomically writes ``_<name>.COMMITTED``; a later
+run reads the committed output back instead of recomputing it.
+
+Fingerprint. Every stage has a key: a hash of its name, its parameters,
+its sink layout, its upstream stages' keys and its input frames'
+``DataFrame.semanticHash()`` (a driver-side plan hash; no Spark job). The
+marker stores the key and the commit ids (``run_id``) of the upstream
+commits the stage read. Before anything runs, ``run_graph`` marks a stage
+dirty when its marker is missing, its key differs, an upstream stage is
+dirty, or an upstream stage now carries a different commit id than the one
+recorded. Dirty stages rerun; invalidation therefore cascades downstream
+by construction. Examples: a new ``threshold`` reruns decide and
+materialize; a changed input frame reruns every stage that reads it and
+everything below. A changed stage *function* is not covered (code is not
+hashed): after a code change, run into a fresh workdir. Input frames hash
+by plan, so a frame read from files that were rewritten in place keys
+differently, while frames rebuilt from the same plan in a new process key
+the same.
+
+Execution. Every stage runs on one thread pool and waits only on the
+stages it depends on, so independent branches overlap. Clean stages
+resume without waiting. Uncommitted stages (``commit=False``) hold
+in-memory intermediates; they run only when a dirty stage needs them and
+never appear in ``ctx.ran``. When the run ends, ``ctx.ran`` lists the
+committed stages in declared order.
 
 Lineage is fused into the write job itself — no extra Spark jobs:
   * the row count comes from an ``Observation`` attached to the written
@@ -13,10 +39,8 @@ Lineage is fused into the write job itself — no extra Spark jobs:
     read driver-side with pyarrow (a pure metadata operation — the exact
     information an Iceberg manifest carries per data file, so on a real
     cluster this becomes a manifest read, not a scan).
-Each stage's lineage lives in its own overwrite-mode file stamped with a
-per-run id, so a force=True rerun or a crash-then-resume can never double
-count rows (previously lineage was append-mode and rows_out summed stale
-runs).
+Each stage's lineage lives in its own overwrite-mode file stamped with the
+run id, so a rerun or a crash-then-resume never double counts rows.
 
 Sinks are pluggable (SURVEY §7.0): the default ``ParquetDirSink`` writes
 partitioned parquet with an atomic commit marker (Iceberg snapshot commit
@@ -29,14 +53,43 @@ true Iceberg snapshot commit with manifest-carried lineage.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
+import re
 import time
 import uuid
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
+from functools import partial
+from typing import Callable
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+
+
+@dataclass
+class Stage:
+    """One declared stage. ``fn`` is called with keyword arguments: each
+    dependency's output, each input frame and each parameter by name —
+    exactly what the fingerprint covers."""
+
+    name: str
+    fn: Callable[..., DataFrame]
+    deps: tuple[str, ...] = ()
+    params: dict = field(default_factory=dict)
+    frames: dict[str, DataFrame] = field(default_factory=dict)
+    partition_by: list[str] | None = None
+    repartition: tuple[int, list[str]] | None = None
+    commit: bool = True
+
+    def fingerprint(self, upstream: dict[str, str]) -> str:
+        """Hash of the name, parameters, sink layout, upstream fingerprints
+        and input frames' plans; runs no Spark job."""
+        doc = [self.name, self.params, self.partition_by, self.repartition, upstream,
+               {n: df.semanticHash() for n, df in self.frames.items()}]
+        blob = json.dumps(doc, sort_keys=True, default=repr).encode()
+        return hashlib.sha256(blob).hexdigest()[:16]
 
 
 @dataclass
@@ -118,24 +171,11 @@ class CatalogTableSink:
             # catalog cannot run REPLACE TABLE AS SELECT. Anything else
             # (executor loss, OOM, quota) re-raises so a transient failure
             # never drop+retries away the previous committed snapshot.
-            # Match the STABLE error condition first (message wording
+            # Match the stable error condition first (message wording
             # varies across Spark versions), message substrings as backup.
-            cond = ""
-            for attr in ("getCondition", "getErrorClass"):
-                fn = getattr(ex, attr, None)
-                if fn is not None:
-                    try:
-                        cond = fn() or ""
-                        break
-                    except Exception:  # noqa: BLE001 - diagnostics only
-                        continue
             msg = str(ex)
-            known_gap = (
-                cond.startswith("UNSUPPORTED_FEATURE")
-                or "REPLACE TABLE AS SELECT" in msg
-                or "RTAS" in msg
-            )
-            if not known_gap:
+            if not ((ex.getCondition() or "").startswith("UNSUPPORTED_FEATURE")
+                    or "REPLACE TABLE AS SELECT" in msg or "RTAS" in msg):
                 raise
             ctx.spark.sql(f"DROP TABLE IF EXISTS {self.table(name)}")
             w.create()
@@ -146,17 +186,9 @@ class CatalogTableSink:
     def data_dir(self, ctx: "PipelineContext", name: str) -> str | None:
         """Table location for footer lineage; an Iceberg deployment reads
         per-file rows from the manifest instead."""
-        rows = ctx.spark.sql(
-            f"DESCRIBE FORMATTED {self.table(name)}"
-        ).collect()
-        for r in rows:
+        for r in ctx.spark.sql(f"DESCRIBE FORMATTED {self.table(name)}").collect():
             if r["col_name"].strip() == "Location":
-                loc = r["data_type"].strip()
-                if loc.startswith("file://"):
-                    return loc[len("file://"):]
-                if loc.startswith("file:"):
-                    return loc[len("file:"):]
-                return loc
+                return re.sub(r"^file:(//)?", "", r["data_type"].strip())
         return None
 
 
@@ -164,35 +196,32 @@ class CatalogTableSink:
 class PipelineContext:
     spark: SparkSession
     workdir: str
-    force: bool = False
     ran: list[StageResult] = field(default_factory=list)
     run_id: str = field(default_factory=lambda: uuid.uuid4().hex[:12])
     sink: object = field(default_factory=ParquetDirSink)
 
-    def _paths(self, name: str) -> tuple[str, str]:
-        out = os.path.join(self.workdir, name)
-        return out, os.path.join(self.workdir, f"_{name}.COMMITTED")
+    def commit(self, name: str) -> dict | None:
+        """The stage's commit marker, or None when it has none."""
+        try:
+            with open(os.path.join(self.workdir, f"_{name}.COMMITTED")) as f:
+                return json.load(f)
+        except FileNotFoundError:
+            return None
 
-    def stage(
-        self,
-        name: str,
-        fn,
-        *,
-        partition_by: list[str] | None = None,
-        repartition: tuple[int, list[str]] | None = None,
-    ) -> DataFrame:
-        """Run (or resume) one stage. ``fn() -> DataFrame``.
+    def stage(self, name: str, fn, *, partition_by: list[str] | None = None,
+              repartition: tuple[int, list[str]] | None = None,
+              key: dict | None = None) -> DataFrame:
+        """Run (or resume) one stage. ``fn() -> DataFrame``. Resumes when
+        the commit marker carries the same ``key``.
 
         repartition=(n, cols): explicit pre-sink repartition — the north
         rule requires it after extraction and before components so the
         downstream shuffle layout is chosen deliberately, not inherited.
         """
-        out, marker = self._paths(name)
-        if not self.force and os.path.exists(marker):
+        done = self.commit(name)
+        if done and done.get("key") == key:
             df = self.sink.read(self, name)
-            with open(marker) as f:
-                rows = json.load(f)["rows_out"]
-            self.ran.append(StageResult(name, df, True, rows, 0.0))
+            self.ran.append(StageResult(name, df, True, done["rows_out"], 0.0))
             return df
 
         t0 = time.time()
@@ -214,28 +243,67 @@ class PipelineContext:
         lin_dir = os.path.join(self.workdir, "_lineage")
         os.makedirs(lin_dir, exist_ok=True)
         pq.write_table(
-            pa.table(
-                {
-                    "partition_id": pa.array([p for p, _ in per_part], pa.int32()),
-                    "rows_out": pa.array([n for _, n in per_part], pa.int64()),
-                    "stage": pa.array([name] * len(per_part), pa.string()),
-                    "run_id": pa.array([self.run_id] * len(per_part), pa.string()),
-                }
-            ),
+            pa.table({
+                "partition_id": pa.array([p for p, _ in per_part], pa.int32()),
+                "rows_out": pa.array([n for _, n in per_part], pa.int64()),
+                "stage": pa.array([name] * len(per_part), pa.string()),
+                "run_id": pa.array([self.run_id] * len(per_part), pa.string()),
+            }),
             os.path.join(lin_dir, f"{name}.parquet"),  # overwrite per stage
         )
 
         wall = time.time() - t0
-        tmp = marker + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(
-                {"stage": name, "rows_out": rows, "wall_s": wall, "run_id": self.run_id},
-                f,
-            )
-        os.replace(tmp, marker)  # atomic commit — resume boundary
+        marker = os.path.join(self.workdir, f"_{name}.COMMITTED")
+        with open(marker + ".tmp", "w") as f:
+            json.dump({"stage": name, "rows_out": rows, "wall_s": wall,
+                       "run_id": self.run_id, "key": key}, f)
+        os.replace(marker + ".tmp", marker)  # atomic commit — resume boundary
         committed = self.sink.read(self, name)
         self.ran.append(StageResult(name, committed, False, rows, wall))
         return committed
 
     def lineage(self) -> DataFrame:
         return self.spark.read.parquet(os.path.join(self.workdir, "_lineage"))
+
+
+def run_graph(ctx: PipelineContext, stages: list[Stage]) -> PipelineContext:
+    """Plan, then run ``stages`` (declared in dependency order) on one pool;
+    the module docstring says what makes a stage dirty."""
+    by_name = {s.name: s for s in stages}
+    prints: dict[str, str] = {}
+    dirty: set[str] = set()
+    futures: dict = {}
+
+    def key(s: Stage) -> dict:
+        ups = {d: (ctx.commit(d) or {}).get("run_id") for d in s.deps if by_name[d].commit}
+        return {"fingerprint": prints[s.name], "upstream": ups}
+
+    for s in stages:
+        prints[s.name] = s.fingerprint({d: prints[d] for d in s.deps})
+        done = ctx.commit(s.name)
+        if s.commit and (dirty & set(s.deps) or not done or done.get("key") != key(s)):
+            dirty.add(s.name)
+    needed = set(dirty)
+    for s in reversed(stages):
+        if s.name in needed:
+            needed.update(d for d in s.deps if not by_name[d].commit)
+
+    def run(s: Stage):
+        # a clean stage resumes without waiting; a dirty one waits for its
+        # inputs, so the upstream commit ids in its key are final
+        ups = {d: futures[d].result() for d in s.deps} if s.name in needed else {}
+        fn = partial(s.fn, **ups, **s.frames, **s.params)
+        if not s.commit:
+            return fn()
+        return ctx.stage(s.name, fn, partition_by=s.partition_by,
+                         repartition=s.repartition, key=key(s))
+
+    todo = [s for s in stages if s.commit or s.name in needed]
+    with ThreadPoolExecutor(max_workers=len(todo)) as pool:
+        for s in todo:
+            futures[s.name] = pool.submit(run, s)
+        for f in futures.values():
+            f.result()
+    order = [s.name for s in stages]
+    ctx.ran.sort(key=lambda r: order.index(r.name))
+    return ctx

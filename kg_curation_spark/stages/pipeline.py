@@ -1,6 +1,6 @@
 """End-to-end pipeline: extract -> candidates -> score -> constrain ->
-decide -> canonicalize -> materialize, with checkpoint-resume at every
-stage boundary (stages/base.py) and per-partition lineage.
+decide -> canonicalize -> materialize, declared once as a stage graph and
+run by stages/base.run_graph (fingerprinted resume, per-partition lineage).
 
 This is the north star's four-stage chain; the correctness gate
 (tests/test_pipeline.py) runs it on a corpus with the reference's DBP-Lit
@@ -11,9 +11,8 @@ triple set plus per-row content-sha256 survival.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from .base import PipelineContext
+from .base import PipelineContext, Stage, run_graph
 from .candidates import generate_candidates
 from .canonicalize import apply_canonical, canonicalize
 from .constraints import (
@@ -29,6 +28,33 @@ from .extract import extract_triples
 from .score import score_candidates
 
 
+def _train_model(kb_triples, entity_label, kge, kge_entity_rows):
+    from ..ml import train_plausibility_weights, weights_to_df
+
+    w = train_plausibility_weights(kb_triples, entity_label, kge,
+                                   kge_entity_rows=kge_entity_rows)
+    return weights_to_df(kb_triples.sparkSession, w)
+
+
+def _score(extract, candidates, kb_triples, kge, entity_class, vector_features,
+           kge_entity_rows, train_model=None):
+    from ..ml import weights_from_df
+
+    return score_candidates(
+        extract, candidates, kb_triples, kge, entity_class=entity_class,
+        vector_features=vector_features, kge_entity_rows=kge_entity_rows,
+        model_w=None if train_model is None else weights_from_df(train_model),
+    )
+
+
+def _constrain(score, card, rng, kb_triples, entity_class):
+    # per-(subject, predicate) object counts are fact-scaled and stay lazy:
+    # their two consumers share one reusable exchange
+    per_subj = per_subject_counts(kb_triples)
+    out = cardinality_score(score, card, kb_triples, per_subj=per_subj)
+    return merge_scores(range_score(out, rng, entity_class))
+
+
 def run_pipeline(
     spark: SparkSession,
     repos: DataFrame,
@@ -37,158 +63,72 @@ def run_pipeline(
     workdir: str,
     threshold: float = 0.9,
     num_partitions: int = 32,
-    force: bool = False,
     kge_entity_rows: int | None = None,
     vector_features: bool = False,
     learn_weights: bool = True,
 ) -> PipelineContext:
-    """Returns the context; final graph at ctx.ran[-1].df.
+    """Returns the context; ``ctx.ran`` lists the committed stages in
+    declared order, the final graph at ``ctx.ran[-1].df``.
+
+    Rerunning on the same workdir resumes every stage whose fingerprint
+    (parameters, input frames' plans, upstream commits) is unchanged: a
+    new ``threshold`` reruns only decide and materialize, a changed
+    ``repos`` reruns extract through materialize while canonicalize and
+    train_model resume. Code changes are not fingerprinted — use a fresh
+    workdir after one.
 
     learn_weights=True (the default — the measured pipeline IS the shipped
     train-then-predict pipeline) trains the M8 plausibility logistic on
     self-supervised KB pos/neg pairs (ml.train_plausibility_weights — the
     reference's shape, util_nn.py:11-108) as its own checkpointed stage,
-    replacing the shipped default weights. Training reads only the KB +
-    KGE, so it runs on the helper pool and overlaps the extract ->
-    candidates leg (guide §2.6); the score stage blocks on the trained
-    weights only when it actually starts. Repeat pipelines that persist
-    the tiny weight table pass learn_weights=False and model_w back in.
+    replacing the shipped default weights. learn_weights=False scores with
+    the shipped default weights.
+
+    vector_features=False: the default model carries zero weights for the
+    M2 block, so materializing those vectors buys no accuracy; pass True
+    with a model that weights them (tests/test_score_vectors.py).
+    kge_entity_rows comes from caller metadata and saves the broadcast
+    budget probe job.
     """
-    from concurrent.futures import ThreadPoolExecutor
-
-    ctx = PipelineContext(spark=spark, workdir=workdir, force=force)
-    # canonicalize reads ONLY the KB (entity_label, redirects) — no edge to
-    # the extract -> decide chain — so its stage runs on a helper thread
-    # and overlaps the whole chain (guide §2.6: overlap independent jobs;
-    # Spark schedules both jobs' tasks FIFO, the canonicalize CC rounds
-    # back-fill executor slots the chain's small stages leave idle).
-    # StageResult append order may interleave, but ctx.ran[-1] is still
-    # materialize, which joins on the result below before running.
-    canon_pool = ThreadPoolExecutor(max_workers=4)
-    f_canon = canon_pool.submit(
-        ctx.stage,
-        "canonicalize",
-        lambda: canonicalize(
-            kb["entity_label"], kb["redirects"], num_partitions=num_partitions
-        ),
-    )
-    # constraint mining likewise reads only the KB; its two dimension-table
-    # checkpoints (see _constrain below) start now and are usually done by
-    # the time the constrain stage needs them.
-    f_card = canon_pool.submit(
-        lambda: mine_cardinality(
-            kb["kb_triples"], per_subj=per_subject_counts(kb["kb_triples"])
-        ).localCheckpoint()
-    )
-    f_rng = canon_pool.submit(
-        lambda: mine_range(
-            kb["kb_triples"], kb["entity_class"], kb["class_ancestor"]
-        ).localCheckpoint()
-    )
-    f_model = None
-    if learn_weights:
-        from ..ml import train_plausibility_weights, weights_to_df
-
-        f_model = canon_pool.submit(
-            ctx.stage,
-            "train_model",
-            lambda: weights_to_df(
-                spark,
-                train_plausibility_weights(
-                    kb["kb_triples"], kb["entity_label"], kge,
-                    kge_entity_rows=kge_entity_rows,
-                ),
-            ),
-        )
-
-    assertions = ctx.stage(
-        "extract",
-        lambda: extract_triples(repos),
+    kbt, labels, classes = kb["kb_triples"], kb["entity_label"], kb["entity_class"]
+    model = ("train_model",) if learn_weights else ()
+    stages = [
         # north rule: explicit repartition after extraction — downstream
-        # stages join on the literal, so co-locate by it now.
-        repartition=(num_partitions, ["literal"]),
-    )
-
-    cand = ctx.stage(
-        "candidates",
-        lambda: generate_candidates(assertions, kb["entity_label"]),
-    )
-
-    def _score() -> DataFrame:
-        model_w = None
-        if f_model is not None:
-            from ..ml import weights_from_df
-
-            # blocks only if training hasn't finished overlapping the
-            # extract -> candidates leg (a bounded driver-side fit)
-            model_w = weights_from_df(f_model.result())
-        return score_candidates(
-            assertions, cand, kb["kb_triples"], kge,
-            entity_class=kb.get("entity_class"),
-            vector_features=vector_features,
-            kge_entity_rows=kge_entity_rows,
-            model_w=model_w,
-        )
-
-    # vector_features=False default: the stand-in model carries ZERO
-    # weights for the M2 block, so materializing the dense/sparse vectors
-    # here buys no accuracy and costs two KB-sized shuffles + an Arrow
-    # pass — pure waste in the throughput pipeline. Deployments with a
-    # trained checkpoint (nonzero block weights) pass True; the full
-    # M2->M8 path is value-oracled (q:linkfeat_vector,
-    # q:linkfeat_sparse_indices) and tested at |P|=1,958
-    # (tests/test_score_vectors.py). kge_entity_rows is threaded from
-    # caller metadata (Iceberg manifest / stage lineage) — saves the
-    # broadcast-budget probe job.
-    scored = ctx.stage("score", _score)
-
-    def _constrain() -> DataFrame:
-        # the per-(subject, predicate) object counts feed BOTH the mined
-        # distribution and the per-candidate existing-count — aggregate the
-        # KB once (ReuseExchange dedupes the shared scan+shuffle)
-        per_subj = per_subject_counts(kb["kb_triples"])
-        # The mined constraints are DIMENSION tables at any corpus scale
-        # (|P| x n and |P| x |C| rows) but their consumers re-derive them
-        # as duplicated plan subtrees (cardinality_score references card 3x
-        # via need/stats, range_score references rng's con 2x) — one
-        # constrain plan measured 162 Exchange + 28 BroadcastExchange nodes
-        # for 15k output rows before truncation. localCheckpoint pins the
-        # few-hundred-row results and collapses every downstream reference
-        # to a leaf (guide §3.3: materialize intermediates to truncate
-        # enormous plans); per_subj stays lazy — it is fact-scaled and its
-        # two consumers share one reusable exchange. The two mining jobs
-        # are independent of the extract -> score chain, so they were
-        # submitted to the helper pool at pipeline start (guide §2.6) —
-        # measured constrain wall: serial checkpoints 4.0-6.6 s,
-        # no-checkpoint 5.1-6.0 s, overlapped 3.3-4.3 s, hoisted-overlap
-        # hides the mining entirely behind the upstream stages.
-        card, rng = f_card.result(), f_rng.result()
-        out = cardinality_score(scored, card, kb["kb_triples"], per_subj=per_subj)
-        out = range_score(out, rng, kb["entity_class"])
-        return merge_scores(out)
-
-    constrained = ctx.stage("constrain", _constrain)
-
-    predictions = ctx.stage(
-        "predict", lambda: rank_predictions(constrained)
-    )
-
-    decided = ctx.stage(
-        "decide", lambda: decide(predictions, threshold=threshold)
-    )
-
-    canon = f_canon.result()
-    canon_pool.shutdown()
-
-    ctx.stage(
-        "materialize",
-        lambda: apply_canonical(decided, canon),
+        # stages join on the literal, so co-locate by it now
+        Stage("extract", extract_triples, frames={"repos": repos},
+              repartition=(num_partitions, ["literal"])),
+        Stage("candidates", lambda extract, entity_label: generate_candidates(
+            extract, entity_label), deps=("extract",), frames={"entity_label": labels}),
+        Stage("train_model", _train_model, params={"kge_entity_rows": kge_entity_rows},
+              frames={"kb_triples": kbt, "entity_label": labels, "kge": kge}),
+        Stage("score", _score, deps=("extract", "candidates", *model),
+              frames={"kb_triples": kbt, "kge": kge, "entity_class": classes},
+              params={"vector_features": vector_features,
+                      "kge_entity_rows": kge_entity_rows}),
+        # the mined constraints are dimension tables (|P| x n, |P| x |C|)
+        # referenced several times by the constrain plan; localCheckpoint
+        # collapses each reference to a leaf. Mining reads only the KB, so
+        # it overlaps the upstream stages — and runs only when constrain does.
+        Stage("card", lambda kb_triples: mine_cardinality(
+            kb_triples, per_subj=per_subject_counts(kb_triples)).localCheckpoint(),
+            frames={"kb_triples": kbt}, commit=False),
+        Stage("rng", lambda **tables: mine_range(**tables).localCheckpoint(), commit=False,
+              frames={"kb_triples": kbt, "entity_class": classes,
+                      "class_ancestor": kb["class_ancestor"]}),
+        Stage("constrain", _constrain, deps=("score", "card", "rng"),
+              frames={"kb_triples": kbt, "entity_class": classes}),
+        Stage("predict", lambda constrain: rank_predictions(constrain), deps=("constrain",)),
+        Stage("decide", lambda predict, threshold: decide(predict, threshold=threshold),
+              deps=("predict",), params={"threshold": threshold}),
+        Stage("canonicalize", canonicalize, params={"num_partitions": num_partitions},
+              frames={"entity_label": labels, "redirects": kb["redirects"]}),
         # final graph partitioned by predicate — the reference's own cache
-        # layout (PTriple_Cache keyed by property) and the natural query key.
-        # repartition on predicate ONLY: with (predicate, subject) each task
-        # would write a file into every predicate dir (|tasks| x |predicates|
-        # small files); on-predicate keeps it ~1 file per predicate.
-        partition_by=["predicate"],
-        repartition=(num_partitions, ["predicate"]),
-    )
-    return ctx
+        # layout (PTriple_Cache keyed by property) and the natural query key;
+        # repartition on predicate only keeps it ~1 file per predicate
+        Stage("materialize", lambda decide, canonicalize: apply_canonical(decide, canonicalize),
+              deps=("decide", "canonicalize"), partition_by=["predicate"],
+              repartition=(num_partitions, ["predicate"])),
+    ]
+    if not learn_weights:
+        stages = [s for s in stages if s.name != "train_model"]
+    return run_graph(PipelineContext(spark=spark, workdir=workdir), stages)

@@ -112,3 +112,131 @@ def test_kill_and_resume(fixture_world, spark):
             .select("subject", "predicate", "object").collect())
     )
     assert before == after
+
+
+# --------------------------------------------------------------------------
+# Fingerprinted resume: each case reruns on a copy of one fresh run's
+# workdir, over seeded synthetic inputs.
+
+STAGE_ORDER = ["extract", "candidates", "train_model", "score", "constrain",
+               "predict", "decide", "canonicalize", "materialize"]
+
+
+@pytest.fixture(scope="module")
+def synth_world(spark, tmp_path_factory):
+    quads = synth.synthetic_quads(spark, 800, seed=7).cache()
+    corpus = synth.render_corpus(quads, seed=7).cache()
+    kb = {k: v.cache() for k, v in synth.build_kb(spark, quads, seed=7).items()}
+    kge = spark.createDataFrame(
+        synth.build_kge(quads.toPandas(), seed=7), "id string, kind string, vec array<float>"
+    ).cache()
+    wd = str(tmp_path_factory.mktemp("kgsynth"))
+    w = {"corpus": corpus, "kb": kb, "kge": kge, "wd": wd}
+    w["ctx"] = _synth_run(spark, w, wd)
+    yield w
+    shutil.rmtree(wd, ignore_errors=True)
+
+
+def _synth_run(spark, w, wd, repos=None, **kw):
+    repos = w["corpus"] if repos is None else repos
+    return run_pipeline(spark, repos, w["kb"], w["kge"], wd, num_partitions=4, **kw)
+
+
+def _copy(w, tmp_path):
+    wd = str(tmp_path / "wd")
+    shutil.copytree(w["wd"], wd)
+    return wd
+
+
+def _rerun_names(ctx):
+    return [r.name for r in ctx.ran if not r.resumed]
+
+
+def _triples(df):
+    cols = ["subject", "predicate", "object", "score", "literal", "content_sha"]
+    return sorted(map(tuple, df.select(*cols).collect()))
+
+
+def test_stage_graph_runs_in_declared_order(synth_world):
+    assert [r.name for r in synth_world["ctx"].ran] == STAGE_ORDER
+    assert not any(r.resumed for r in synth_world["ctx"].ran)
+
+
+def test_new_threshold_reruns_decide_and_materialize(synth_world, spark, tmp_path):
+    """No marker surgery: the threshold is part of decide's fingerprint."""
+    from kg_curation_spark.stages.canonicalize import apply_canonical
+    from kg_curation_spark.stages.decide import decide
+
+    w = synth_world
+    ctx = _synth_run(spark, w, _copy(w, tmp_path), threshold=0.5)
+    assert _rerun_names(ctx) == ["decide", "materialize"]
+    assert [r.name for r in ctx.ran] == STAGE_ORDER
+    want = apply_canonical(decide(_stage(ctx, "predict").df, threshold=0.5),
+                           _stage(ctx, "canonicalize").df)
+    assert _triples(_stage(ctx, "materialize").df) == _triples(want)
+
+
+def test_changed_input_reruns_its_downstream(synth_world, spark, tmp_path):
+    w = synth_world
+    repos = sorted(r["repo"] for r in w["corpus"].select("repo").distinct().collect())
+    half = w["corpus"].filter(F.col("repo").isin(repos[::2]))
+    ctx = _synth_run(spark, w, _copy(w, tmp_path), repos=half)
+    assert _rerun_names(ctx) == ["extract", "candidates", "score", "constrain",
+                                 "predict", "decide", "materialize"]
+    assert _stage(ctx, "canonicalize").resumed and _stage(ctx, "train_model").resumed
+    assert _stage(ctx, "extract").rows_out < _stage(w["ctx"], "extract").rows_out
+
+
+def test_mining_runs_only_when_constrain_does(synth_world, spark, tmp_path, monkeypatch):
+    from kg_curation_spark.stages import pipeline
+
+    calls = []
+    for name in ("mine_cardinality", "mine_range"):
+        orig = getattr(pipeline, name)
+        monkeypatch.setattr(
+            pipeline, name, lambda *a, _o=orig, _n=name, **kw: calls.append(_n) or _o(*a, **kw)
+        )
+    w = synth_world
+    wd = _copy(w, tmp_path)
+    ctx = _synth_run(spark, w, wd, threshold=0.5)
+    assert _stage(ctx, "constrain").resumed and calls == []
+    os.remove(os.path.join(wd, "_constrain.COMMITTED"))
+    ctx = _synth_run(spark, w, wd, threshold=0.5)
+    assert _rerun_names(ctx) == ["constrain", "predict", "decide", "materialize"]
+    assert sorted(calls) == ["mine_cardinality", "mine_range"]
+
+
+def test_stage_resumes_only_on_same_key(spark, tmp_path):
+    from kg_curation_spark.stages.base import PipelineContext
+
+    calls = []
+
+    def run(key):
+        ctx = PipelineContext(spark=spark, workdir=str(tmp_path))
+        ctx.stage("s", lambda: calls.append(key) or spark.range(3), key=key)
+        return ctx.ran[0]
+
+    assert not run({"fingerprint": "a"}).resumed
+    res = run({"fingerprint": "a"})
+    assert res.resumed and res.rows_out == 3 and calls == [{"fingerprint": "a"}]
+    assert not run({"fingerprint": "b"}).resumed
+    assert len(calls) == 2
+
+
+def test_upstream_recommit_reruns_dependents(spark, tmp_path):
+    """A stage whose upstream was committed again by another run reruns,
+    even though its own fingerprint is unchanged."""
+    from kg_curation_spark.stages.base import PipelineContext, Stage, run_graph
+
+    graph = [Stage("a", lambda: spark.range(4)),
+             Stage("b", lambda a: a.filter("id > 0"), deps=("a",))]
+
+    def run(stages):
+        ctx = run_graph(PipelineContext(spark=spark, workdir=str(tmp_path)), stages)
+        return {r.name: r.resumed for r in ctx.ran}
+
+    assert run(graph) == {"a": False, "b": False}
+    assert run(graph) == {"a": True, "b": True}
+    os.remove(os.path.join(tmp_path, "_a.COMMITTED"))
+    assert run(graph[:1]) == {"a": False}  # e.g. a run that stopped after a
+    assert run(graph) == {"a": True, "b": False}
